@@ -2,6 +2,8 @@
 properties of the ones'-complement sum and ASCII encoding, HDU-level
 fill/verify, and the Spark writer-option → distributed-audit loop."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +13,8 @@ from spark_fits_spark.fitscore import writer as fw
 from spark_fits_spark.fitscore.checksum import (
     apply_checksums, encode_checksum, sum32, verify_hdu)
 
-REF = "/root/reference/src/test/resources"
+# reference-suite fixtures, rebuilt by tests/data/make_fixtures.py
+REF = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 def test_sum32_end_around_carry():
@@ -112,7 +115,7 @@ def test_writer_option_and_distributed_audit(spark, tmp_path):
 
 
 def test_reference_fixture_audit_is_null(spark):
-    """The reference's own fixtures carry no checksum cards — the audit
+    """The reference's fixtures carry no checksum cards — the audit
     reports NULL verdicts (absence), never false failures."""
     rows = fits_verify_checksums(spark, f"{REF}/test_file.fits").collect()
     assert len(rows) >= 2

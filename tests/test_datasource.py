@@ -15,7 +15,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-REF = "/root/reference/src/test/resources"
+# reference-suite fixtures, rebuilt by tests/data/make_fixtures.py
+REF = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 def read_fits(spark, path, hdu=1, **opts):

@@ -1,8 +1,10 @@
 """Unit tests for fitscore — ports of the reference's FitsLibTest /
-FitsSchemaTest golden values (run against the reference's own fixture
-files, read-only) plus round-trips through our own writer."""
+FitsSchemaTest golden values (run against the reference's fixtures as
+rebuilt by the standalone tests/data/make_fixtures.py) plus round-trips
+through our own writer."""
 
 import io
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -21,7 +23,8 @@ from spark_fits_spark.fitscore.file import walk_hdus
 from spark_fits_spark.fitscore.header import split_card
 from spark_fits_spark.fitscore import writer
 
-REF = "/root/reference/src/test/resources"
+# reference-suite fixtures, rebuilt by tests/data/make_fixtures.py
+REF = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 # ---------- golden values from the reference fixtures (FitsLibTest) ----------

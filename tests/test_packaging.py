@@ -11,6 +11,8 @@ import sys
 import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the script runs with cwd outside the repo, so the path is absolute
+FIXTURE = os.path.join(REPO, "tests", "data", "test_file.fits")
 
 _SCRIPT = textwrap.dedent(
     """
@@ -32,7 +34,7 @@ _SCRIPT = textwrap.dedent(
     register_fits(spark)
 
     # 1) the python datasource itself (executor unpickles FitsDataSource)
-    ref = "/root/reference/src/test/resources/test_file.fits"
+    ref = {fixture!r}
     df = spark.read.format("fits").option("hdu", 1).load(ref)
     assert df.count() == 20000, "fits scan failed on bare session"
 
@@ -48,7 +50,7 @@ _SCRIPT = textwrap.dedent(
     spark.stop()
     print("BARE-SESSION-OK", n)
     """
-).format(repo=REPO)
+).format(repo=REPO, fixture=FIXTURE)
 
 
 def test_bare_session_runs_pandas_udf_operators(tmp_path):

@@ -3,9 +3,11 @@ suite (src/test/scala, 83 cases across FitsLibTest / FitsSchemaTest /
 ReadFitsTest / packageTest) mapped to the repo test that pins the same
 behavior. Two enforcement directions:
 
-- the map's key set must equal the names re-extracted from the
-  reference's .scala files (a reference case we silently dropped, or a
-  stale key after an upstream rename, both fail);
+- the map's key set must equal the committed list of reference case
+  names, ``tests/data/reference_test_names.txt`` (a reference case we
+  silently dropped, or a stale key, both fail); where the reference
+  checkout exists, a second test checks that list against the names
+  re-extracted from its .scala files;
 - every mapped counterpart ``tests/<file>.py::<func>`` must exist (a
   repo test rename breaks the map loudly instead of rotting).
 
@@ -19,8 +21,11 @@ INVARIANT (block boundaries, first-row bytes), per SURVEY.md §5's
 import os
 import re
 
+import pytest
+
 REF_TEST_DIR = "/root/reference/src/test/scala/com/astrolabsoftware/sparkfits"
 HERE = os.path.dirname(__file__)
+NAMES_FILE = os.path.join(HERE, "data", "reference_test_names.txt")
 
 F = "FitsLibTest"
 S = "FitsSchemaTest"
@@ -205,6 +210,16 @@ PARITY = {
 }
 
 
+def _committed_reference_cases():
+    cases = set()
+    with open(NAMES_FILE) as f:
+        for line in f:
+            if line.strip() and not line.startswith("#"):
+                suite, name = line.rstrip("\n").split("\t")
+                cases.add((suite, name))
+    return cases
+
+
 def _extract_reference_cases():
     cases = set()
     for suite in (F, S, R, P):
@@ -215,12 +230,20 @@ def _extract_reference_cases():
 
 
 def test_parity_map_covers_reference_suite_exactly():
-    ref = _extract_reference_cases()
-    assert ref, "reference test sources not readable"
+    ref = _committed_reference_cases()
+    assert len(ref) == 83, f"{len(ref)} reference cases in {NAMES_FILE}"
     missing = sorted(ref - set(PARITY))
     stale = sorted(set(PARITY) - ref)
     assert missing == [], f"reference cases with no parity entry: {missing}"
     assert stale == [], f"parity entries no longer in the reference: {stale}"
+
+
+@pytest.mark.skipif(not os.path.isdir(REF_TEST_DIR),
+                    reason="reference checkout not present")
+def test_committed_names_match_reference_sources():
+    """The committed name list is the one upstream: runs wherever the
+    reference checkout exists."""
+    assert _committed_reference_cases() == _extract_reference_cases()
 
 
 def test_parity_counterparts_exist():

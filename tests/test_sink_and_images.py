@@ -1,10 +1,13 @@
 """FITS writer sink round-trips and image helpers."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-REF = "/root/reference/src/test/resources"
+# reference-suite fixtures, rebuilt by tests/data/make_fixtures.py
+REF = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 def test_fits_write_roundtrip(spark, tmp_path):
